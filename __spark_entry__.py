@@ -180,6 +180,13 @@ ROTATE_FRONT = (
     "text_tfidf_topterms",
     "quality_calibration_bins",
     "quality_ece_summary",
+    # IVF store probes now run the one batched probe on a one-row
+    # panel; the two within-cell cosine queries share one normalized
+    # store scan (outputs identical to before at sf0.001 and sf0.01):
+    "ann_ivf_store_probe",
+    "ann_ivf_store_append_probe",
+    "sim_hard_negatives",
+    "dedup_embedding_drop_rule",
 )
 
 

@@ -172,6 +172,19 @@ def _parse_extractor(raw: object) -> Extractor:
     )
 
 
+def _parse_actions(raw: object) -> dict[str, str]:
+    """Action name -> output topic. A null or empty topic is an error:
+    ``str(None)`` would otherwise route to a topic named ``"None"``."""
+    if not raw:
+        return {}
+    if not isinstance(raw, dict):
+        raise ConfigError(f"bad actions: {raw!r}")
+    for k, v in raw.items():
+        if v is None or str(v) == "":
+            raise ConfigError(f"action {k!r} has no output topic")
+    return {str(k): str(v) for k, v in raw.items()}
+
+
 def load_split_conf(yaml_text: str) -> SpliterCollection:
     """Parse the YAML routing program (reference main.go:291-305).
 
@@ -198,7 +211,7 @@ def load_split_conf(yaml_text: str) -> SpliterCollection:
         spliters.append(
             Spliter(
                 input_topic=str(raw.get("input_topic", "")),
-                actions={str(k): str(v) for k, v in (raw.get("actions") or {}).items()},
+                actions=_parse_actions(raw.get("actions")),
                 splits=splits,
             )
         )

@@ -15,12 +15,12 @@ artifact. This module is that artifact:
     PARTITIONED BY cell, so a probe's I/O is pruned to the probed
     cells' directories and never scans the other ~k-1/k of the data.
 
-* ``probe_ivf_index`` — ONLINE: score the k centroids against the
-  query (a k-row job — no corpus touch), take the top ``nprobe``
-  cells, and join them broadcast against the partitioned store.
-  The cell ids stay INSIDE the plan (no driver collect): Spark's
-  dynamic partition pruning turns the broadcast join on the partition
-  column into runtime partition filters, which
+* ``probe_ivf_index_many`` — ONLINE: score the k centroids against a
+  panel of queries (k rows per query — no corpus touch), take each
+  query's top ``nprobe`` cells, and join them broadcast against the
+  partitioned store. The cell ids stay INSIDE the plan (no driver
+  collect): Spark's dynamic partition pruning turns the broadcast
+  join on the partition column into runtime partition filters, which
   tests/test_ivf_store.py asserts on the physical plan.
 
 The reference engine has no persistent state at all (its only sink is
@@ -36,7 +36,7 @@ import json
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_go_streamer_spark.functions.rounding import stable_round
@@ -73,14 +73,18 @@ def default_index_base(sf_dir: str) -> str:
 
 
 def _source_fingerprint(sf_dir: str) -> dict:
-    """Size+mtime of the embeddings fixture — enough to notice the
-    driver regenerating testdata under an unchanged path."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
+    """Absolute path, size and nanosecond mtime of the embeddings
+    fixture — enough to notice testdata regenerated under an unchanged
+    path. The path is part of it because ``default_index_base`` is not
+    injective (``/d/a_b/c`` and ``/d/a/b_c`` share a directory): two
+    corpora landing there rebuild instead of serving each other's
+    index."""
+    path = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
     try:
         st = os.stat(path)
-        return {"size": st.st_size, "mtime": int(st.st_mtime)}
+        return {"path": path, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
     except OSError:
-        return {"size": -1, "mtime": -1}
+        return {"path": path, "size": -1, "mtime_ns": -1}
 
 
 def _ensure_cached(base: str, fp: dict, build) -> str:
@@ -96,8 +100,9 @@ def _ensure_cached(base: str, fp: dict, build) -> str:
     )
     if done and os.path.exists(marker):
         try:
-            if json.load(open(marker)) == fp:
-                return base
+            with open(marker) as f:
+                if json.load(f) == fp:
+                    return base
         except (OSError, ValueError):
             pass
     build()
@@ -149,8 +154,6 @@ def ensure_ivf_index_with_append(
     are just labels."""
 
     def build() -> None:
-        from pyspark.sql import Window
-
         train = emb.withColumn(
             "vec_id",
             F.row_number().over(Window.orderBy("vec_id")) - 1,
@@ -246,217 +249,33 @@ def append_to_ivf_index(
     )
 
 
-def _query_long(spark: SparkSession, qv: list[float]) -> DataFrame:
-    """(pos, qv) long form of the query vector — a k-free tiny frame."""
-    return spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(qv)], "pos int, q double"
-    )
-
-
-def probe_ivf_index(
-    spark: SparkSession,
-    base: str,
-    qv: list[float],
-    nprobe: int = 2,
-    topk: int = 5,
-    exclude_id: int | None = None,
-    min_cell_sim: float = -1.0,
-) -> DataFrame:
-    """ONLINE probe against a persisted index: rank the k stored
-    centroids by cosine to ``qv`` (k-row work), then broadcast the top
-    ``nprobe`` cell ids into the partitioned vectors table — dynamic
-    partition pruning keeps the scan to those cells — and return the
-    cosine top-k within them. No driver-side collect anywhere; the
-    probed cell set lives inside the plan.
-
-    ``min_cell_sim`` floors the centroid cosine a cell must clear to be
-    probed (skip cells pointing away from the query even when nprobe
-    would allow them). It doubles as the selective predicate Spark's
-    DynamicPartitionPruning rule requires on the build side — without
-    it the probe would scan every cell directory despite the join."""
-    q = _query_long(spark, qv)
-    q_norm = float(sum(v * v for v in qv)) ** 0.5
-    if q_norm == 0.0:
-        raise ValueError("probe_ivf_index: zero-norm query vector")
-
-    cents = spark.read.parquet(centroids_path(base))
-    scored = (
-        cents.join(F.broadcast(q), "pos")
-        .groupBy("cid")
-        .agg(
-            F.sum(F.col("c") * F.col("q")).alias("dot"),
-            F.sum(F.col("c") * F.col("c")).alias("cc"),
-        )
-        .select(
-            "cid",
-            stable_round(
-                F.col("dot") / (F.sqrt("cc") * F.lit(q_norm)), 6
-            ).alias("qsim"),
-        )
-    )
-    top_cells = (
-        scored.filter(F.col("qsim") > F.lit(min_cell_sim))
-        .orderBy(F.col("qsim").desc(), F.col("cid").asc())
-        .limit(nprobe)
-        .select(F.col("cid").alias("cell"))
-    )
-
-    vecs = spark.read.parquet(vectors_path(base))
-    if exclude_id is not None:
-        vecs = vecs.filter(F.col("vec_id") != exclude_id)
-    qv_arr = F.array(*[F.lit(float(v)) for v in qv])
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            qv_arr,
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    vnorm = F.sqrt(
-        F.aggregate(
-            F.col("embedding").cast("array<double>"),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )
-    )
-    # zero-norm stored vectors would score NaN (which Spark sorts above
-    # every double) — drop them before the cosine instead of letting a
-    # degenerate vector outrank every real match
-    from pyspark.sql import Window
-
-    cand = (
-        vecs.join(F.broadcast(top_cells), "cell")
-        .filter(vnorm > 0)
-        .select(
-            "vec_id",
-            "cell",
-            stable_round(dot / (vnorm * F.lit(q_norm)), 6).alias("cos_sim"),
-        )
-    )
-    # serve-side dedup by vec_id: the streaming ingest path is
-    # at-least-once, so a replayed micro-batch can leave the same
-    # vector in the store twice — keep each vec_id's best-scoring row
-    # so replays never surface duplicate ids in the top-k
-    dw = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cell").asc()
-    )
-    return (
-        cand.withColumn("_dd", F.row_number().over(dw))
-        .filter(F.col("_dd") == 1)
-        .drop("_dd")
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(topk)
-    )
-
-
-def probe_ivf_store(
-    spark: SparkSession,
-    base: str,
-    q_emb: DataFrame,
-    nprobe: int = 2,
-    topk: int = 5,
-    exclude_id: int | None = None,
-    min_cell_sim: float = -1.0,
-    pool=None,
-) -> DataFrame:
-    """In-plan variant of :func:`probe_ivf_index`: the query vector is a
-    ONE-ROW DataFrame with a single array column ``qv`` (e.g. selected
-    out of the corpus, or parallelize'd from a client request), so the
-    whole probe — centroid ranking, cell selection, in-cell scoring —
-    stays inside one Spark plan with no driver-side collect at all.
-
-    Same physical shape as the literal path: centroid ranking is k-row
-    work against the broadcast exploded query; the top-``nprobe`` cell
-    ids broadcast into the cell-PARTITIONED vectors table where dynamic
-    partition pruning bounds the scan (tests/test_ivf_store.py asserts
-    ``dynamicpruning`` on this plan too); top-k compiles to
-    TakeOrderedAndProject. Zero-norm stored vectors are dropped before
-    the cosine (NaN would sort above every real score)."""
-    q_long = q_emb.select(
-        F.posexplode(F.col("qv").cast("array<double>")).alias("pos", "q")
-    )
-    qn = q_long.agg(F.sqrt(F.sum(F.col("q") * F.col("q"))).alias("qn"))
-
-    cents = spark.read.parquet(centroids_path(base))
-    scored = (
-        cents.join(F.broadcast(q_long), "pos")
-        .groupBy("cid")
-        .agg(
-            F.sum(F.col("c") * F.col("q")).alias("dot"),
-            F.sum(F.col("c") * F.col("c")).alias("cc"),
-        )
-        .crossJoin(F.broadcast(qn))
-        .select(
-            "cid",
-            stable_round(
-                F.col("dot") / (F.sqrt("cc") * F.col("qn")), 6
-            ).alias("qsim"),
-        )
-    )
-    top_cells = (
-        scored.filter(F.col("qsim") > F.lit(min_cell_sim))
-        .orderBy(F.col("qsim").desc(), F.col("cid").asc())
-        .limit(nprobe)
-        .select(F.col("cid").alias("cell"))
-    )
-
-    vecs = spark.read.parquet(vectors_path(base))
-    if exclude_id is not None:
-        vecs = vecs.filter(F.col("vec_id") != exclude_id)
-    if pool is not None:
-        # restrict the CANDIDATE pool (e.g. appended-only) — the cell
-        # ranking above still runs over the full stored quantizer
-        vecs = vecs.filter(pool)
-    from pyspark.sql import Window
-
-    cand = (
-        vecs.join(F.broadcast(top_cells), "cell")
-        .crossJoin(F.broadcast(q_emb.select("qv")))
-        .filter(vec_norm(F.col("embedding")) > 0)
-        .select(
-            "vec_id",
-            "cell",
-            stable_round(
-                vec_cosine(F.col("embedding"), F.col("qv")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    # same replay-defense dedup as probe_ivf_index (see comment there)
-    dw = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cell").asc()
-    )
-    return (
-        cand.withColumn("_dd", F.row_number().over(dw))
-        .filter(F.col("_dd") == 1)
-        .drop("_dd")
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(topk)
-    )
-
-
 def probe_ivf_index_many(
     spark: SparkSession,
     base: str,
     q_df: DataFrame,
     nprobe: int = 2,
     topk: int = 5,
-    min_cell_sim: float = -1.0,
+    pool: Column | None = None,
 ) -> DataFrame:
-    """Batched multi-query probe against a persisted index: ``q_df`` is
-    (q_id, qv) — a whole panel of query vectors scored in ONE plan.
+    """ONLINE probe against a persisted index: ``q_df`` is (q_id, qv) —
+    a whole panel of query vectors scored in ONE plan, with no
+    driver-side collect anywhere (a single query is a one-row panel).
     Centroid ranking is k x |Q| rows (a per-q_id window picks each
     query's top-``nprobe`` cells); the (q_id, cell) pairs broadcast
-    into the cell-partitioned store; the final per-query top-k is a
-    window over candidates only. This is the serving-path shape: the
-    per-batch cost is |Q| x (k + nprobe cells), never the corpus.
+    into the cell-partitioned store, where dynamic partition pruning
+    bounds the scan to the probed cells' directories; the final
+    per-query top-k is a window over candidates only. This is the
+    serving-path shape: the per-batch cost is |Q| x (k + nprobe
+    cells), never the corpus.
+
+    ``pool`` restricts the CANDIDATE set (e.g. ``vec_id != 0`` to
+    exclude the query's own row, or appended-only ids); cell ranking
+    still runs over the full stored quantizer.
 
     Zero-norm queries produce no output rows (their centroid cosine is
     NULL-division-guarded out); zero-norm stored vectors are dropped
-    before scoring, as in the single-query probe."""
-    from pyspark.sql import Window
-
+    before scoring (their NaN cosine would sort above every real
+    score)."""
     q_long = q_df.select(
         "q_id",
         F.posexplode(F.col("qv").cast("array<double>")).alias("pos", "q"),
@@ -485,14 +304,19 @@ def probe_ivf_index_many(
     cw = Window.partitionBy("q_id").orderBy(
         F.col("qsim").desc(), F.col("cid").asc()
     )
+    # qsim > -1 drops NULL-scored (zero-norm centroid) cells, and is
+    # the selective build-side predicate Spark's DynamicPartitionPruning
+    # rule requires — without it the join would scan every cell
     top_cells = (
-        scored.filter(F.col("qsim") > F.lit(min_cell_sim))
+        scored.filter(F.col("qsim") > F.lit(-1.0))
         .withColumn("_rk", F.row_number().over(cw))
         .filter(F.col("_rk") <= nprobe)
         .select("q_id", F.col("cid").alias("cell"))
     )
 
     vecs = spark.read.parquet(vectors_path(base))
+    if pool is not None:
+        vecs = vecs.filter(pool)
     cand = (
         vecs.join(F.broadcast(top_cells), "cell")
         .join(F.broadcast(q_df), "q_id")
@@ -506,8 +330,10 @@ def probe_ivf_index_many(
             ).alias("cos_sim"),
         )
     )
-    # replay-defense dedup by (q_id, vec_id) before ranking (see
-    # probe_ivf_index): at-least-once ingest can duplicate a vector
+    # replay-defense dedup by (q_id, vec_id) before ranking: the
+    # streaming ingest path is at-least-once, so a replayed micro-batch
+    # can leave the same vector in the store twice — keep each vec_id's
+    # best-scoring row so replays never surface duplicate ids
     ddw = Window.partitionBy("q_id", "vec_id").orderBy(
         F.col("cos_sim").desc(), F.col("cell").asc()
     )

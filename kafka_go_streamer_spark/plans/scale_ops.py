@@ -15,7 +15,7 @@ from kafka_go_streamer_spark.functions.vectors import cosine, cosine_sql
 from kafka_go_streamer_spark.operators.ivf_store import (
     ensure_ivf_index,
     ensure_ivf_index_with_append,
-    probe_ivf_store,
+    probe_ivf_index_many,
 )
 from kafka_go_streamer_spark.operators.kmeans import (
     _assign_sql,
@@ -398,6 +398,13 @@ def _store_probe_sql() -> str:
     """
 
 
+def _query_panel(emb: DataFrame) -> DataFrame:
+    """vec_id 0's embedding as a one-row (q_id, qv) probe panel."""
+    return emb.filter(F.col("vec_id") == 0).select(
+        F.lit(0).alias("q_id"), F.col("embedding").alias("qv")
+    )
+
+
 @query("ann_ivf_store_probe", oracle=_store_probe_sql())
 def ann_ivf_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN search against the MATERIALIZED IVF index — the production
@@ -415,7 +422,8 @@ def ann_ivf_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path re-ran n·sqrt(n) training per invocation and measured x17 wall
     at x10 data (BENCH_SCALEUP r6); the probe's online cost is
     ~nprobe·sqrt(n) scoring rows. The query vector (vec_id 0) stays
-    inside the plan — no driver collect anywhere (probe_ivf_store).
+    inside the plan as a one-row panel — no driver collect anywhere
+    (probe_ivf_index_many).
 
     Oracle note: nprobe=2 probes the two best TRAINED cells by centroid
     cosine, so unlike the inline query (nprobe=1 on the query's own
@@ -423,12 +431,10 @@ def ann_ivf_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED centroid cosine with cid tiebreak."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = ensure_ivf_index(emb, sf_dir, iters=2)
-    q_emb = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
-    return probe_ivf_store(
-        spark, base, q_emb, nprobe=2, topk=5, exclude_id=0
-    )
+    return probe_ivf_index_many(
+        spark, base, _query_panel(emb), nprobe=2, topk=5,
+        pool=F.col("vec_id") != 0,
+    ).select("vec_id", "cell", "cos_sim")
 
 
 #: Held-out slice for the incremental-append store: vec_id % MOD == REM
@@ -556,9 +562,8 @@ def ann_ivf_store_append_probe(
     base = ensure_ivf_index_with_append(
         resident, arriving, sf_dir, tag="append", iters=2
     )
-    q_emb = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
+    q_df = _query_panel(emb)
+    not_query = F.col("vec_id") != 0
     appended = (
         F.col("vec_id") % IVF_APPEND_MOD == IVF_APPEND_REM
     )
@@ -575,13 +580,14 @@ def ann_ivf_store_append_probe(
         )
 
     full = tagged(
-        probe_ivf_store(spark, base, q_emb, nprobe=2, topk=5, exclude_id=0),
+        probe_ivf_index_many(
+            spark, base, q_df, nprobe=2, topk=5, pool=not_query
+        ),
         "all",
     )
     app_only = tagged(
-        probe_ivf_store(
-            spark, base, q_emb, nprobe=2, topk=5, exclude_id=0,
-            pool=appended,
+        probe_ivf_index_many(
+            spark, base, q_df, nprobe=2, topk=5, pool=not_query & appended
         ),
         "appended",
     )

@@ -553,14 +553,14 @@ def _drop_rule_sql(max_reps: int) -> str:
     """
 
 
-def embedding_drop_rule(
-    spark: SparkSession, sf_dir: str, max_reps: int = NEARDUP_MAX_CELL_REPS
-) -> DataFrame:
-    """Store-backed, rep-capped embedding drop rule (see the registered
-    query's docstring); ``max_reps`` is exposed so tests can disable the
-    cap and pin capped == uncapped wherever cells fit under it."""
-    from pyspark.sql import Window
-
+def _normalized_store(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The corpus, its materialized IVF store (vec_id, cell, embedding)
+    and the store's unit-normalized long form (vec_id, cell, pos, v),
+    zero-norm vectors dropped — the shared scan of the store-backed
+    within-cell cosine queries, which accumulate cosines relationally
+    by equi-joining on (cell, pos)."""
     from kafka_go_streamer_spark.operators.ivf_store import (
         ensure_ivf_index,
         vectors_path,
@@ -587,6 +587,18 @@ def embedding_drop_rule(
         .select("vec_id", "cell", "pos", (F.col("v") / F.col("vn")).alias("v"))
         .localCheckpoint(eager=False)
     )
+    return emb, vecs, exn
+
+
+def embedding_drop_rule(
+    spark: SparkSession, sf_dir: str, max_reps: int = NEARDUP_MAX_CELL_REPS
+) -> DataFrame:
+    """Store-backed, rep-capped embedding drop rule (see the registered
+    query's docstring); ``max_reps`` is exposed so tests can disable the
+    cap and pin capped == uncapped wherever cells fit under it."""
+    from pyspark.sql import Window
+
+    emb, vecs, exn = _normalized_store(spark, sf_dir)
     w = Window.partitionBy("cell").orderBy("vec_id")
     reps = (
         vecs.select("cell", "vec_id")
@@ -801,32 +813,7 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     nor negatives (consistently on both engines)."""
     from pyspark.sql import Window
 
-    from kafka_go_streamer_spark.operators.ivf_store import (
-        ensure_ivf_index,
-        vectors_path,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = ensure_ivf_index(emb, sf_dir, iters=2)
-    vecs = spark.read.parquet(vectors_path(base)).select(
-        "vec_id", "cell", "embedding"
-    )
-    ex = vecs.select(
-        "vec_id",
-        "cell",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "pos", "v"
-        ),
-    )
-    vn = ex.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("vn")
-    )
-    exn = (
-        ex.join(vn, "vec_id")
-        .filter(F.col("vn") > 0)
-        .select("vec_id", "cell", "pos", (F.col("v") / F.col("vn")).alias("v"))
-        .localCheckpoint(eager=False)
-    )
+    _, vecs, exn = _normalized_store(spark, sf_dir)
     anchors = vecs.filter(
         (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < PANEL_MAX_ID)
     ).select(F.col("vec_id").alias("anchor_id"), "cell")

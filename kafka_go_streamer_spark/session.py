@@ -18,7 +18,10 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local-mode parallelism: ``$SPARK_GRAFT_CPUS`` when set (the
+    deployment override), else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def sf_dir() -> str:

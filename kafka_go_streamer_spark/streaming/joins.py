@@ -260,10 +260,9 @@ def ingest_ann_stream(
     keyed by a computed column (the cell assignment), which the
     streaming file sink can't express. At-least-once via the
     checkpoint: a replayed batch re-appends its rows. The serving
-    paths (probe_ivf_index / probe_ivf_store / probe_ivf_index_many)
-    ENFORCE the (vec_id) dedup — each keeps one row per vec_id before
-    ranking — so a replay never surfaces duplicate ids in a served
-    top-k; the store itself can additionally be compacted with
+    path (probe_ivf_index_many) ENFORCES the (vec_id) dedup — it keeps
+    one row per (q_id, vec_id) before ranking — so a replay never
+    surfaces duplicate ids in a served top-k; the store itself can additionally be compacted with
     operators/compaction.py on the retrain cadence."""
     from kafka_go_streamer_spark.operators.ivf_store import (
         append_to_ivf_index,

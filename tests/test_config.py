@@ -135,3 +135,11 @@ def test_empty_and_invalid_configs():
     assert load_split_conf("") .spliters == []
     with pytest.raises(ConfigError):
         load_split_conf("spliters_templates:\n  - input_topic: t\n    splits: []\n")
+    # a null or empty action topic must not become a topic named "None"
+    for value in ("", "''"):
+        with pytest.raises(ConfigError):
+            load_split_conf(
+                "spliters_templates:\n  - input_topic: t\n"
+                f"    actions: {{unmatched: {value}}}\n"
+                "    splits:\n      - extractor: {pattern: x}\n"
+            )

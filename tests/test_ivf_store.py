@@ -16,8 +16,7 @@ from kafka_go_streamer_spark.functions.vectors import cosine
 from kafka_go_streamer_spark.operators.ivf_store import (
     build_ivf_index,
     ensure_ivf_index,
-    probe_ivf_index,
-    probe_ivf_store,
+    probe_ivf_index_many,
     train_centroids,
     vectors_path,
 )
@@ -42,6 +41,32 @@ def _qv(spark):
     return [float(x) for x in row["embedding"]]
 
 
+def _panel(emb, ids=(0,)):
+    """(q_id, qv) probe panel of the given corpus vectors."""
+    return emb.filter(F.col("vec_id").isin(*ids)).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
+    )
+
+
+def _probe0(spark, base, emb, topk=5, pool=None):
+    """vec_id 0 probed as a one-row panel, itself excluded from the
+    candidates: [(vec_id, cell, cos_sim)] best-first."""
+    not_self = F.col("vec_id") != 0
+    rows = probe_ivf_index_many(
+        spark, base, _panel(emb), nprobe=2, topk=topk,
+        pool=not_self if pool is None else not_self & pool,
+    ).collect()
+    return [
+        (r["vec_id"], r["cell"], r["cos_sim"])
+        for r in sorted(rows, key=lambda r: r["rk"])
+    ]
+
+
+def _has_dpp(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "dynamicpruning" in plan.lower()
+
+
 def test_build_probe_matches_inline_computation(spark, tmp_path):
     """The probe over the PERSISTED index must return exactly what the
     same construction computes inline from the trained assignment —
@@ -51,12 +76,7 @@ def test_build_probe_matches_inline_computation(spark, tmp_path):
     build_ivf_index(emb, base)
     qv = _qv(spark)
 
-    got = [
-        (r["vec_id"], r["cell"], r["cos_sim"])
-        for r in probe_ivf_index(
-            spark, base, qv, nprobe=2, topk=5, exclude_id=0
-        ).collect()
-    ]
+    got = _probe0(spark, base, emb)
 
     # inline twin: same centroids, same assignment, same probe math
     cents = train_centroids(emb, iters=2)
@@ -128,45 +148,29 @@ def test_vectors_layout_partitioned_by_cell(spark, tmp_path):
 def test_probe_plan_uses_dynamic_partition_pruning(spark, tmp_path):
     """The probed cell ids never leave the plan: the broadcast join on
     the partition column must compile to a dynamic-pruning subquery on
-    the scan, so only the probed cells' files are read."""
-    base = str(tmp_path / "ivf")
-    build_ivf_index(_load_emb(spark), base)
-    df = probe_ivf_index(spark, base, _qv(spark), nprobe=2, topk=5)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower()
-
-
-def test_inplan_probe_matches_literal_probe(spark, tmp_path):
-    """probe_ivf_store (query vector kept inside the plan) must return
-    exactly what the literal-vector probe returns, and its scan must
-    also be dynamically pruned — the registered store-probe query runs
-    this path."""
+    the scan, so only the probed cells' files are read — for a one-row
+    panel (the registered store-probe queries, with a candidate pool)
+    and for a multi-query panel (the serving path)."""
     base = str(tmp_path / "ivf")
     emb = _load_emb(spark)
     build_ivf_index(emb, base)
-    qv = _qv(spark)
-    want = [
-        (r["vec_id"], r["cell"], r["cos_sim"])
-        for r in probe_ivf_index(
-            spark, base, qv, nprobe=2, topk=5, exclude_id=0
-        ).collect()
-    ]
-    q_emb = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
+    one = probe_ivf_index_many(
+        spark, base, _panel(emb), nprobe=2, topk=5,
+        pool=F.col("vec_id") != 0,
     )
-    df = probe_ivf_store(spark, base, q_emb, nprobe=2, topk=5, exclude_id=0)
-    got = [(r["vec_id"], r["cell"], r["cos_sim"]) for r in df.collect()]
-    assert got == want
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower()
+    assert _has_dpp(one)
+    three = probe_ivf_index_many(
+        spark, base, _panel(emb, (0, 7, 42)), nprobe=2, topk=5
+    )
+    assert _has_dpp(three)
+    assert {r["q_id"] for r in three.collect()} == {0, 7, 42}
 
 
 def test_probe_drops_zero_norm_vectors(spark, tmp_path):
     """A zero-norm stored vector must never appear in the top-k (its
     cosine is NaN, which would otherwise sort above every real score),
-    and a zero-norm query is rejected outright."""
-    import pytest
-
+    and a zero-norm query gets no rows while the rest of its panel is
+    still answered."""
     base = str(tmp_path / "ivf")
     rows = []
     for i in range(10):
@@ -179,14 +183,23 @@ def test_probe_drops_zero_norm_vectors(spark, tmp_path):
         rows, "vec_id bigint, embedding array<float>"
     )
     build_ivf_index(emb, base)
-    got = probe_ivf_index(
-        spark, base, [1.0, 0.0, 0.0, 0.0], nprobe=10, topk=10
+    panel = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.0, 0.0, 0.0, 0.0]),
+            (3, [0.0, 1.0, 0.0, 0.0]),
+        ],
+        "q_id int, qv array<double>",
+    )
+    got = probe_ivf_index_many(
+        spark, base, panel, nprobe=10, topk=10
     ).collect()
-    ids = [r["vec_id"] for r in got]
-    assert 7 not in ids
+    assert {r["q_id"] for r in got} == {1, 3}
+    assert 7 not in {r["vec_id"] for r in got}
     assert all(r["cos_sim"] == r["cos_sim"] for r in got)  # no NaN
-    with pytest.raises(ValueError):
-        probe_ivf_index(spark, base, [0.0, 0.0, 0.0, 0.0])
+    for qid in (1, 3):
+        # every non-zero stored vector is served to the real queries
+        assert len([r for r in got if r["q_id"] == qid]) == 9
 
 
 def test_ensure_index_builds_once_and_detects_staleness(
@@ -213,6 +226,28 @@ def test_ensure_index_builds_once_and_detects_staleness(
     assert os.path.getmtime(marker) > mtime  # rebuilt
 
 
+def test_colliding_index_paths_rebuild(spark, tmp_path, monkeypatch):
+    """``a_b/c`` and ``a/b_c`` map to the same index directory; two
+    same-size fixtures with the same mtime under them must not share
+    an index — the second corpus rebuilds instead of hitting the
+    first one's cache."""
+    import shutil
+
+    monkeypatch.setenv("SPARK_GRAFT_IVF_DIR", str(tmp_path / "cache"))
+    srcs = [tmp_path / "d" / "a_b" / "c", tmp_path / "d" / "a" / "b_c"]
+    for src in srcs:
+        src.mkdir(parents=True)
+        shutil.copy(f"{SF_DIR}/embeddings.parquet", src / "embeddings.parquet")
+        os.utime(src / "embeddings.parquet", ns=(10**18, 10**18))
+    emb = _load_emb(spark)
+
+    base = ensure_ivf_index(emb, str(srcs[0]), iters=1)
+    marker = os.path.join(vectors_path(base), "_SUCCESS")
+    mtime = os.stat(marker).st_mtime_ns
+    assert ensure_ivf_index(emb, str(srcs[1]), iters=1) == base  # collide
+    assert os.stat(marker).st_mtime_ns > mtime  # rebuilt, not a cache hit
+
+
 def test_index_survives_session_boundary_sf01(spark, tmp_path, monkeypatch):
     """The production lifecycle contract: build the index once at
     sf0.1, then probe it from a FRESH session (new session state — no
@@ -225,16 +260,12 @@ def test_index_survives_session_boundary_sf01(spark, tmp_path, monkeypatch):
     base = ensure_ivf_index(emb, sf_dir)
 
     fresh = spark.newSession()
-    qv = [
-        float(x)
-        for x in load_table(fresh, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == 0)
-        .collect()[0]["embedding"]
-    ]
-    df = probe_ivf_index(fresh, base, qv, nprobe=2, topk=5, exclude_id=0)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower()
-    got = df.collect()
+    df = probe_ivf_index_many(
+        fresh, base, _panel(load_table(fresh, sf_dir, "embeddings")),
+        nprobe=2, topk=5, pool=F.col("vec_id") != 0,
+    )
+    assert _has_dpp(df)
+    got = sorted(df.collect(), key=lambda r: r["rk"])
     assert len(got) == 5
     # scores are real cosines, best-first
     sims = [r["cos_sim"] for r in got]
@@ -277,13 +308,7 @@ def test_append_folds_new_vectors_into_stored_cells(spark, tmp_path):
 
     # probe over the appended store == inline scoring of ALL vectors
     # restricted to the probed cells (same centroids, same math)
-    qv = _qv(spark)
-    got = [
-        (r["vec_id"], r["cell"], r["cos_sim"])
-        for r in probe_ivf_index(
-            spark, base, qv, nprobe=2, topk=5, exclude_id=0
-        ).collect()
-    ]
+    got = _probe0(spark, base, emb)
     top_cells = {cell for (_vid, cell, _sim) in got}
     all_cells = {
         r["vec_id"]: r["cid"]
@@ -316,12 +341,11 @@ def test_append_folds_new_vectors_into_stored_cells(spark, tmp_path):
 
 def test_replayed_append_never_serves_duplicate_ids(spark, tmp_path):
     """At-least-once ingest defense: append the SAME batch twice (a
-    replayed micro-batch) and every probe path must still serve each
+    replayed micro-batch) and the probe must still serve each
     vec_id at most once, with the same result set as the single-append
     store — the dedup lives in the serving path, not the writer."""
     from kafka_go_streamer_spark.operators.ivf_store import (
         append_to_ivf_index,
-        probe_ivf_index_many,
     )
 
     base = str(tmp_path / "ivf")
@@ -330,34 +354,24 @@ def test_replayed_append_never_serves_duplicate_ids(spark, tmp_path):
     new = emb.filter(F.col("vec_id") >= 300)
     build_ivf_index(old, base)
     append_to_ivf_index(spark, base, new)
-    qv = _qv(spark)
-    before = [
-        (r["vec_id"], r["cell"], r["cos_sim"])
-        for r in probe_ivf_index(
-            spark, base, qv, nprobe=2, topk=5, exclude_id=0
-        ).collect()
-    ]
+    before = _probe0(spark, base, emb)
 
     append_to_ivf_index(spark, base, new)  # the replay
     vecs = spark.read.parquet(vectors_path(base))
     assert vecs.count() > emb.count()  # store really does hold dups
 
-    after = [
-        (r["vec_id"], r["cell"], r["cos_sim"])
-        for r in probe_ivf_index(
-            spark, base, qv, nprobe=2, topk=5, exclude_id=0
-        ).collect()
-    ]
+    after = _probe0(spark, base, emb)
     assert after == before
     ids = [v for v, _, _ in after]
     assert len(ids) == len(set(ids))
 
-    q_df = spark.createDataFrame([(1, qv)], "q_id int, qv array<double>")
-    many = probe_ivf_index_many(spark, base, q_df, nprobe=2, topk=5).collect()
-    many_ids = [r["vec_id"] for r in many]
-    assert len(many_ids) == len(set(many_ids))
-    # the replayed duplicate of vec_id 0 is still excludable / servable
-    assert 0 in many_ids or len(many_ids) == 5
+    # a multi-query panel without a pool dedups per query too
+    many = probe_ivf_index_many(
+        spark, base, _panel(emb, (0, 7, 42)), nprobe=2, topk=5
+    ).collect()
+    for qid in (0, 7, 42):
+        many_ids = [r["vec_id"] for r in many if r["q_id"] == qid]
+        assert len(many_ids) == len(set(many_ids)) == 5
 
 
 def test_ensure_with_append_builds_once_and_appends_once(
@@ -419,19 +433,8 @@ def test_probe_pool_restricts_candidates_not_cells(spark, tmp_path):
     emb = _load_emb(spark)
     base = str(tmp_path / "ivf")
     build_ivf_index(emb, base, iters=2)
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
-    pooled = probe_ivf_store(
-        spark, base, q, nprobe=2, topk=5, exclude_id=0,
-        pool=F.col("vec_id") % 10 == 7,
-    ).collect()
+    pooled = _probe0(spark, base, emb, pool=F.col("vec_id") % 10 == 7)
     assert pooled, "pool filter returned nothing"
-    assert all(r["vec_id"] % 10 == 7 for r in pooled)
-    full_cells = {
-        r["cell"]
-        for r in probe_ivf_store(
-            spark, base, q, nprobe=2, topk=1000, exclude_id=0
-        ).collect()
-    }
-    assert {r["cell"] for r in pooled} <= full_cells
+    assert all(vid % 10 == 7 for vid, _, _ in pooled)
+    full_cells = {cell for _, cell, _ in _probe0(spark, base, emb, topk=1000)}
+    assert {cell for _, cell, _ in pooled} <= full_cells
