@@ -111,6 +111,9 @@ class Spliter:
         return out
 
     def validate(self) -> None:
+        """Shape checks only. Regex splits are compiled in the dialect
+        that runs them (``java.util.regex`` behind ``rlike``) when the
+        routing plan is built: see ``routing.check_regex_splits``."""
         if not self.input_topic:
             raise ConfigError("spliter missing input_topic")
         if not self.splits:
@@ -120,14 +123,6 @@ class Spliter:
                 raise ConfigError(
                     f"spliter {self.input_topic!r}: split with empty pattern"
                 )
-            if s.extractor.use_regex:
-                try:
-                    re.compile(s.extractor.pattern)
-                except re.error as e:  # fail at plan build, like main.go:451-454
-                    raise ConfigError(
-                        f"spliter {self.input_topic!r}: bad regex "
-                        f"{s.extractor.pattern!r}: {e}"
-                    ) from e
 
 
 @dataclass

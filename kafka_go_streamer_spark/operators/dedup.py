@@ -67,15 +67,8 @@ def cap_bucket(df: DataFrame, *key_cols: str, cap: int = MAX_BUCKET) -> DataFram
     )
 
 
-def shingles(text: Column) -> Column:
-    """Distinct ``SHINGLE_SIZE``-word shingles of the lowercased text.
-    Documents shorter than one shingle contribute their whole word join
-    as a single shingle (so every doc has >= 1)."""
-    return F.array_distinct(shingle_stream(text))
-
-
 def shingles_sql(words_col: str) -> str:
-    """DuckDB twin of :func:`shingles`, over a pre-bound words column
+    """DuckDB twin of :func:`shingles_of`, over a pre-bound words column
     (bind ``words_sql(text)`` in a CTE first; DuckDB lists are
     1-indexed so the range shifts by one vs the Spark form)."""
     w = words_col
@@ -88,29 +81,23 @@ def shingles_sql(words_col: str) -> str:
     )
 
 
-def shingle_stream(text: Column) -> Column:
-    """Shingles WITHOUT the per-row ``array_distinct`` — for pipelines
-    that explode and aggregate per document anyway: the signature min is
+def shingle_stream_of(w: Column) -> Column:
+    """``SHINGLE_SIZE``-word shingles of a PRE-BOUND words column,
+    WITHOUT the per-row ``array_distinct`` — for pipelines that explode
+    and aggregate per document anyway: the signature min is
     duplicate-insensitive and ``collect_set`` re-dedups, so the O(k²)
     in-row distinct is pure overhead there (measured ~2-4× of the whole
-    shingle pass at sf0.1). Use :func:`shingles` when the VALUE is the
-    distinct set itself (e.g. an in-row Jaccard).
+    shingle pass at sf0.1). Use :func:`shingles_of` when the VALUE is
+    the distinct set itself (e.g. an in-row Jaccard). Documents shorter
+    than one shingle contribute their whole word join as a single
+    shingle (so every doc has >= 1).
 
-    PERF NOTE: this convenience form inlines the ``words`` split into
-    the transform lambda, and Catalyst evaluates the split once per
-    ``element_at`` reference — ~SHINGLE_SIZE re-splits per shingle.
-    Hot paths should bind the words array in its OWN projection and
-    call :func:`shingle_stream_of` (measured 3× on the shingle explode
-    at sf0.1 — see with_minhash)."""
-    return shingle_stream_of(words(text))
-
-
-def shingle_stream_of(w: Column) -> Column:
-    """:func:`shingle_stream` over a PRE-BOUND words column. Callers
-    must materialize the split in a preceding projection
+    Callers must materialize the split in a preceding projection
     (``.select(words(text).alias("_w"))``) so the regex split is
-    evaluated once per row; CollapseProject keeps the binding because
-    the split is referenced from several lambda positions."""
+    evaluated once per row — inlining it into the transform lambda
+    re-splits per ``element_at`` (measured 3× on the shingle explode at
+    sf0.1); CollapseProject keeps the binding because the split is
+    referenced from several lambda positions."""
     n = F.size(w)
     make = F.transform(
         F.sequence(F.lit(0), n - SHINGLE_SIZE),
@@ -124,22 +111,16 @@ def shingle_stream_of(w: Column) -> Column:
 
 
 def shingles_of(w: Column) -> Column:
-    """:func:`shingles` over a pre-bound words column (see
+    """Distinct shingles of a pre-bound words column (see
     :func:`shingle_stream_of`)."""
     return F.array_distinct(shingle_stream_of(w))
 
 
-def minhash_sig(sh: Column, k: int) -> Column:
-    """k-th minhash: lexicographic min of the k-th 8-hex-char slice of
-    md5(shingle). One digest per shingle serves all NUM_HASHES
+def minhash_sig_sql(sh_expr: str, k: int) -> str:
+    """DuckDB k-th minhash: lexicographic min of the k-th 8-hex-char
+    slice of md5(shingle). One digest per shingle serves all NUM_HASHES
     functions (128 md5 bits = 4 independent 32-bit hashes) — 4× less
     hashing than a per-function salted digest, same LSH behavior."""
-    return F.array_min(
-        F.transform(sh, lambda s: F.substring(F.md5(s), 8 * k + 1, 8))
-    )
-
-
-def minhash_sig_sql(sh_expr: str, k: int) -> str:
     return (
         f"list_min(list_transform({sh_expr}, s -> substr(md5(s), {8 * k + 1}, 8)))"
     )
@@ -169,7 +150,7 @@ def with_minhash(
     intersections/sizes, which are hash-invariant, and the 8-byte
     longs shuffle, checkpoint, and array_intersect far cheaper than
     ~20-char strings (measured −16% on the whole LSH pair path at
-    sf0.1). Use :func:`shingles` where the string VALUES matter.
+    sf0.1). Use :func:`shingles_of` where the string VALUES matter.
 
     ``words_col``: hand in a frame that ALREADY carries the bound
     words array under this name (e.g. a pinned panel tokenization

@@ -1,34 +1,14 @@
-"""Similarity search over embedding columns (``array<float>``).
-
-Two strategies:
-
-* **brute-force cosine top-k** — a narrow projection computing cosine
-  against a literal query vector, then global top-k
-  (TakeOrderedAndProject). Linear scan, embarrassingly parallel: the
-  right baseline, and often the right answer when the query set is
-  small.
-* **random-hyperplane LSH (SimHash for vectors)** — H fixed hyperplanes
-  -> H-bit signature -> bucket equi-join. Candidate generation never
-  materializes all pairs; at cluster scale the bucket join is an
-  ordinary shuffle join on a short key. Hyperplanes are derived
-  deterministically from md5 so Spark and the SQL oracle share them
-  as literals.
+"""Random-hyperplane LSH (SimHash for vectors) over embedding columns
+(``array<float>``): H fixed hyperplanes -> H-bit signature -> bucket
+equi-join. Candidate generation never materializes all pairs; at
+cluster scale the bucket join is an ordinary shuffle join on a short
+key. Hyperplanes are derived deterministically from md5 so Spark and
+the SQL oracle share them as literals.
 """
 
 from __future__ import annotations
 
 import hashlib
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from kafka_go_streamer_spark.functions.rounding import stable_round
-
-from kafka_go_streamer_spark.functions.vectors import (
-    as_double,
-    cosine,
-    vector_literal,
-)
 
 
 def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
@@ -44,20 +24,6 @@ def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Signature = integer whose bit p is sign(plane_p . vec)."""
-    v = as_double(vec)
-    sig = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(v, vector_literal(plane), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sig = sig + F.when(d > 0, F.lit(2**p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return sig
-
-
 def _spark_double_lit(x: float) -> str:
     """Spark SQL double literal: plain decimals need the ``D`` suffix
     (they'd parse as DECIMAL and change the arithmetic); exponent forms
@@ -67,15 +33,13 @@ def _spark_double_lit(x: float) -> str:
 
 
 def lsh_signature_spark_sql(vec_expr: str, planes: list[list[float]]) -> str:
-    """Spark-SQL string form of :func:`lsh_signature` — semantically
-    identical (same zip_with/aggregate fold, same plane literals, same
-    left-to-right IEEE summation), but parsed JVM-side in ONE call.
+    """Spark-SQL signature expression: bit p is sign(plane_p . vec),
+    folded left to right with zip_with/aggregate in DOUBLE.
 
-    The Column form builds ~planes x dim literal nodes through py4j;
-    at 16 planes x 64 dims that is ~0.85 s of DRIVER time per plan
-    build — more than the query's whole execution at bench scale, and
-    per-invocation (the driver harness and bench rebuild plans each
-    pass). The SQL string costs one parse."""
+    A string, not a Column: the Column form builds ~planes x dim
+    literal nodes through py4j — at 16 planes x 64 dims ~0.85 s of
+    DRIVER time per plan build, more than the query's whole execution
+    at bench scale. The SQL string costs one JVM-side parse."""
     sig_terms = []
     for p, plane in enumerate(planes):
         lits = ", ".join(_spark_double_lit(x) for x in plane)
@@ -95,26 +59,3 @@ def lsh_signature_sql(vec_expr: str, planes: list[list[float]]) -> str:
         d = f"list_dot_product({vec_expr}::DOUBLE[], [{lits}]::DOUBLE[])"
         terms.append(f"(CASE WHEN {d} > 0 THEN {2**p} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")::BIGINT"
-
-
-def topk_cosine(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Brute-force cosine top-k against one query vector.
-
-    Scale: cosine is a codegen'd projection; ORDER BY+LIMIT compiles to
-    TakeOrderedAndProject (per-partition heap of k, no global sort)."""
-    q = vector_literal(query_vec)
-    out = df.select(
-        F.col(id_col),
-        "label",
-        stable_round(cosine(F.col(vec_col), q), 6).alias("cos_sim"),
-    )
-    if exclude_id is not None:
-        out = out.filter(F.col(id_col) != exclude_id)
-    return out.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)

@@ -112,10 +112,8 @@ def scored_gold(d: DataFrame) -> DataFrame:
     """(score, gold) projection of a documents-like frame (needs a
     ``text`` column, passes any other columns through): the frozen
     classifier's 4dp-rounded probability next to the gate-chain label.
-    The ONE scoring stage shared by ``quality_calibration_bins``,
-    ``quality_ece_summary``, and the streaming calibration monitor
-    (streaming/calibration.py) — so batch and stream can never
-    silently score differently."""
+    The ONE scoring stage shared by ``quality_calibration_bins`` (via
+    :func:`calibration_partials`) and ``quality_ece_summary``."""
     from kafka_go_streamer_spark.plans.text import (
         QC_W0,
         QC_W_ALPHA,
@@ -161,6 +159,43 @@ def scored_gold(d: DataFrame) -> DataFrame:
     )
 
 
+def calibration_partials(bdf: DataFrame) -> DataFrame:
+    """Per-bin partial counters (bin, n, sum_score, sum_gold) of a
+    documents-like frame (needs ``text``): one micro-batch for the
+    streaming monitor, the whole corpus for the batch query."""
+    scored = scored_gold(bdf.select("text"))
+    return scored.groupBy(
+        F.least(F.floor(F.col("score") * 10), F.lit(9))
+        .cast("int")
+        .alias("bin")
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("score").alias("sum_score"),
+        F.sum(F.col("gold").cast("double")).alias("sum_gold"),
+    )
+
+
+def merged_calibration(partials: DataFrame) -> DataFrame:
+    """The reliability table from any number of
+    :func:`calibration_partials` batches. The sums are associative;
+    double addition is not, so batchings agree only after the 4 dp
+    ``stable_round`` absorbs association-order ulps."""
+    g = partials.groupBy("bin").agg(
+        F.sum("n").cast("long").alias("n_docs"),
+        F.sum("sum_score").alias("_ss"),
+        F.sum("sum_gold").alias("_sg"),
+    )
+    return g.select(
+        "bin",
+        "n_docs",
+        stable_round(F.col("_ss") / F.col("n_docs"), 4).alias("mean_score"),
+        stable_round(F.col("_sg") / F.col("n_docs"), 4).alias("pos_rate"),
+        stable_round(
+            (F.col("_sg") - F.col("_ss")) / F.col("n_docs"), 4
+        ).alias("gap"),
+    )
+
+
 @query("quality_calibration_bins", oracle=_calibration_sql)
 def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability table for the frozen logistic quality classifier:
@@ -176,26 +211,60 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: features, sigmoid, and the gold label are one narrow
     codegen projection (the classifier's own audited inference path);
     the reliability table is one map-side-combined aggregate on a
-    10-value key. The score is rounded at 4dp on both engines BEFORE
-    the decile floor, so bin edges are deterministic."""
+    10-value key, merged on the same key (no second exchange). The
+    score is rounded at 4dp on both engines BEFORE the decile floor,
+    so bin edges are deterministic. The whole corpus is the
+    one-batch case of the streaming monitor."""
     # cpu_fan: the per-byte text stage below is CPU-dense and the
     # fixture scan is one row group (one task) — measured SERIAL at
     # sf1.0 (r17 c8-vs-c32 sweep, ratio ~1.0). Row-aware width: the
     # full-parallelism fan measured +0.5-2.5 s at sf0.1 (pinned
     # frames fan every downstream stage); see sources/tables.cpu_fan.
     d = cpu_fan(spark, load_table(spark, sf_dir, "documents"), sf_dir)
-    scored = scored_gold(d.select("text"))
-    return scored.groupBy(
-        F.least(F.floor(F.col("score") * 10), F.lit(9))
-        .cast("int")
-        .alias("bin")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        stable_round(F.avg("score"), 4).alias("mean_score"),
-        stable_round(F.avg(F.col("gold") * 1.0), 4).alias("pos_rate"),
-        stable_round(
-            F.avg(F.col("gold") * 1.0) - F.avg("score"), 4
-        ).alias("gap"),
+    return merged_calibration(calibration_partials(d))
+
+
+def qi_class_partials(bdf: DataFrame) -> DataFrame:
+    """Partial quasi-identifier class counters (lang, source, len_bin,
+    c) of a documents-like frame (needs lang, source, n_chars).
+    Integer sums: any batching merges to the same class sizes."""
+    return bdf.groupBy(
+        "lang",
+        "source",
+        F.expr(f"n_chars div {QI_LEN_BIN}").alias("len_bin"),
+    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+
+
+def merged_k_anonymity(partials: DataFrame) -> DataFrame:
+    """The k-anonymity profile from any number of
+    :func:`qi_class_partials` batches: merge the class sizes (same
+    key, no second exchange), then fan each class over the k grid."""
+    classes = partials.groupBy("lang", "source", "len_bin").agg(
+        F.sum("c").alias("c")
+    )
+    fanned = classes.select(
+        "c",
+        F.explode(F.array(*[F.lit(k) for k in K_ANON_GRID])).alias("k"),
+    )
+    return (
+        fanned.groupBy(F.col("k").cast("int").alias("k"))
+        .agg(
+            F.sum(F.when(F.col("c") < F.col("k"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_classes_below"),
+            F.sum(F.when(F.col("c") < F.col("k"), F.col("c")).otherwise(0))
+            .cast("long")
+            .alias("n_docs_below"),
+            F.sum("c").alias("_n_total"),
+        )
+        .select(
+            "k",
+            "n_classes_below",
+            "n_docs_below",
+            stable_round(
+                F.col("n_docs_below") * 1.0 / F.col("_n_total"), 6
+            ).alias("doc_share"),
+        )
     )
 
 
@@ -239,37 +308,7 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the tiny class frame — the fact table is scanned exactly
     once and never joined."""
     d = load_table(spark, sf_dir, "documents")
-    classes = d.groupBy(
-        "lang",
-        "source",
-        F.expr(f"n_chars div {QI_LEN_BIN}").alias("len_bin"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    fanned = classes.select(
-        "c",
-        F.explode(
-            F.array(*[F.lit(k) for k in K_ANON_GRID])
-        ).alias("k"),
-    )
-    return (
-        fanned.groupBy(F.col("k").cast("int").alias("k"))
-        .agg(
-            F.sum(F.when(F.col("c") < F.col("k"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_classes_below"),
-            F.sum(F.when(F.col("c") < F.col("k"), F.col("c")).otherwise(0))
-            .cast("long")
-            .alias("n_docs_below"),
-            F.sum("c").alias("_n_total"),
-        )
-        .select(
-            "k",
-            "n_classes_below",
-            "n_docs_below",
-            stable_round(
-                F.col("n_docs_below") * 1.0 / F.col("_n_total"), 6
-            ).alias("doc_share"),
-        )
-    )
+    return merged_k_anonymity(qi_class_partials(d))
 
 
 @query(
@@ -598,13 +637,23 @@ def dedup_component_size_histogram(
     )
 
 
-def allocation_from_per_lang(per_lang: DataFrame) -> DataFrame:
-    """The closed-form uniform-target allocation from a (lang, avail)
-    frame — the ONE arithmetic stage shared by
-    ``sample_language_budget`` and the streaming language-budget
-    monitor (streaming/langbudget.py), so batch and stream can never
-    silently allocate differently. Input frame is language-bounded
-    (single-digit rows); every window below runs on it."""
+def lang_partials(bdf: DataFrame) -> DataFrame:
+    """Per-language partial token counters (lang, avail) of a
+    documents-like frame (needs lang, text)."""
+    return bdf.groupBy("lang").agg(
+        F.sum(X.token_count(F.col("text"))).cast("long").alias("avail")
+    )
+
+
+def merged_language_budget(partials: DataFrame) -> DataFrame:
+    """The allocation worksheet from any number of
+    :func:`lang_partials` batches: merge the integer token sums on the
+    same key, then the closed-form uniform-target allocation. The
+    merged frame is language-bounded (single-digit rows); every
+    window below runs on it."""
+    per_lang = partials.groupBy("lang").agg(
+        F.sum("avail").cast("long").alias("avail")
+    )
     w = Window.partitionBy()
     base = per_lang.select(
         "lang",
@@ -710,10 +759,7 @@ def sample_language_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. The allocation is deterministic closed-form arithmetic —
     no iterative water-filling loop, no driver-side solver."""
     d = load_table(spark, sf_dir, "documents")
-    per_lang = d.groupBy("lang").agg(
-        F.sum(X.token_count(F.col("text"))).cast("long").alias("avail")
-    )
-    return allocation_from_per_lang(per_lang)
+    return merged_language_budget(lang_partials(d))
 
 
 def _aspect_buckets_sql() -> str:

@@ -910,10 +910,8 @@ def _pii_density_sql() -> str:
 def pii_per_doc(d: DataFrame) -> DataFrame:
     """Per-document PII projection (needs doc_id, source, text):
     (source, chars, ne, np) under the deterministic PII seeding and
-    the RE2∩Java-dialect patterns. The ONE scoring stage shared by
-    ``pii_density_by_source`` and the streaming PII monitor
-    (streaming/pii.py), so batch and stream can never silently count
-    differently."""
+    the RE2∩Java-dialect patterns: the input stage of
+    :func:`pii_partials`."""
     from kafka_go_streamer_spark.plans.training_ops import (
         EMAIL_RE,
         PHONE_RE,
@@ -945,6 +943,49 @@ def pii_per_doc(d: DataFrame) -> DataFrame:
     )
 
 
+def pii_partials(bdf: DataFrame) -> DataFrame:
+    """Per-source partial PII counters (source, n, docs_with_pii, ne,
+    np, chars) of a documents-like frame (needs doc_id, source,
+    text)."""
+    per = pii_per_doc(bdf.select("doc_id", "source", "text"))
+    return per.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(F.when(F.col("ne") + F.col("np") > 0, 1).otherwise(0))
+        .cast("long")
+        .alias("docs_with_pii"),
+        F.sum("ne").cast("long").alias("ne"),
+        F.sum("np").cast("long").alias("np"),
+        F.sum("chars").cast("long").alias("chars"),
+    )
+
+
+def merged_pii_density(partials: DataFrame) -> DataFrame:
+    """The PII triage table from any number of :func:`pii_partials`
+    batches: all five counters are integer sums merged on the same
+    key, and the density divides the merged totals, so every batching
+    gives the same rows."""
+    g = partials.groupBy("source").agg(
+        F.sum("n").cast("long").alias("n_docs"),
+        F.sum("docs_with_pii").cast("long").alias("docs_with_pii"),
+        F.sum("ne").cast("long").alias("n_emails"),
+        F.sum("np").cast("long").alias("n_phones"),
+        F.sum("chars").cast("long").alias("_chars"),
+    )
+    return g.select(
+        "source",
+        "n_docs",
+        "docs_with_pii",
+        "n_emails",
+        "n_phones",
+        stable_round(
+            (F.col("n_emails") + F.col("n_phones"))
+            * 10000.0
+            / F.col("_chars"),
+            6,
+        ).alias("pii_per_10kchars"),
+    )
+
+
 @query("pii_density_by_source", oracle=_pii_density_sql)
 def pii_density_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-gate rollup of the PII scrub: per source, how many
@@ -958,18 +999,7 @@ def pii_density_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a pure narrow projection (seed + two codegen'd
     regexp_count) followed by one aggregate by source."""
     d = load_table(spark, sf_dir, "documents")
-    per = pii_per_doc(d.select("doc_id", "source", "text"))
-    return per.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.when(F.col("ne") + F.col("np") > 0, 1).otherwise(0))
-        .cast("long")
-        .alias("docs_with_pii"),
-        F.sum("ne").cast("long").alias("n_emails"),
-        F.sum("np").cast("long").alias("n_phones"),
-        stable_round(
-            F.sum(F.col("ne") + F.col("np")) * 10000.0 / F.sum("chars"), 6
-        ).alias("pii_per_10kchars"),
-    )
+    return merged_pii_density(pii_partials(d))
 
 
 # --------------------------------------------------------------------

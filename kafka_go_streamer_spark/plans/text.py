@@ -338,7 +338,6 @@ def pipeline_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from kafka_go_streamer_spark.operators.dedup import (  # noqa: E402
-    shingles,
     shingles_of,
     shingles_sql,
 )

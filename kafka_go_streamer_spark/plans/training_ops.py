@@ -29,7 +29,6 @@ from kafka_go_streamer_spark.operators.dedup import (
     connected_components,
     minhash_lsh_pairs,
     minhash_lsh_pairs_sql,
-    shingles,
     shingles_of,
     shingles_sql,
 )

@@ -19,13 +19,11 @@ partitions on any cluster size; predicates are JVM-side (``rlike`` /
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.errors import IllegalArgumentException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_go_streamer_spark.config import ResolvedSplit, Spliter
-
-#: Sentinel used in SQL-twin form; the DataFrame form uses a NULL topic.
-DROP = None
+from kafka_go_streamer_spark.config import ConfigError, ResolvedSplit, Spliter
 
 
 def split_predicate(split: ResolvedSplit, value: Column) -> Column:
@@ -37,6 +35,26 @@ def split_predicate(split: ResolvedSplit, value: Column) -> Column:
     if split.use_regex:
         return value.rlike(split.pattern)
     return value.contains(F.lit(split.pattern))
+
+
+def check_regex_splits(spark: SparkSession, spliter: Spliter) -> None:
+    """Compile every regex split with ``java.util.regex.Pattern``, the
+    dialect ``rlike`` runs, and raise :class:`ConfigError` for one it
+    rejects — at plan build, like the reference (main.go:451-454),
+    instead of inside the first task. Python ``re`` is the wrong
+    judge both ways: it accepts ``(?P<n>..)``, which Java rejects, and
+    rejects ``\\z``, which Java accepts."""
+    pattern_cls = spark._jvm.java.util.regex.Pattern
+    for s in spliter.splits:
+        if not s.extractor.use_regex:
+            continue
+        try:
+            pattern_cls.compile(s.extractor.pattern)
+        except IllegalArgumentException as e:  # PatternSyntaxException
+            raise ConfigError(
+                f"spliter {spliter.input_topic!r}: bad regex "
+                f"{s.extractor.pattern!r}: {str(e).splitlines()[0]}"
+            ) from None
 
 
 def routing_expr(spliter: Spliter, value: Column) -> Column:
@@ -88,7 +106,11 @@ def route(
       sees one replacement char).
 
     Both are pinned by tests/test_routing.py's invalid-UTF-8 cases.
+
+    Raises :class:`ConfigError` before returning the plan if a regex
+    split does not compile in Java's dialect (:func:`check_regex_splits`).
     """
+    check_regex_splits(df.sparkSession, spliter)
     value = F.col(value_col)
     if dict(df.dtypes).get(value_col) == "binary":
         value = value.cast("string")
@@ -106,14 +128,6 @@ def route_and_filter(
     return route(df, spliter, value_col, topic_col).filter(
         F.col(topic_col).isNotNull()
     )
-
-
-def project_key_value(df: DataFrame, extra: list[str] | None = None) -> DataFrame:
-    """The reference's output projection: keep only {key, value}, dropping
-    consumed-topic/partition/offset/headers/timestamp
-    (reference main.go:496-499)."""
-    cols = [c for c in ("key", "value") if c in df.columns] + (extra or [])
-    return df.select(*cols)
 
 
 def split_condition_sql(split: ResolvedSplit, value_expr: str) -> str:

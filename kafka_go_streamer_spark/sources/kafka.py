@@ -31,6 +31,10 @@ from pyspark.sql import DataFrame, SparkSession
 DEFAULT_TRIGGER = "10 seconds"
 
 
+def _jaas_quote(value: str) -> str:
+    return '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+
 def security_options(
     *,
     sasl_username: str | None = None,
@@ -43,7 +47,10 @@ def security_options(
     insecure_skip_verify: bool = False,
 ) -> dict[str, str]:
     """TLS / SASL-PLAIN auth as pass-through Kafka options
-    (reference main.go:223-287 equivalents)."""
+    (reference main.go:223-287 equivalents). The credentials are
+    quoted JAAS values: ``\\`` and ``"`` are backslash-escaped, which
+    Kafka's ``JaasConfig`` (a ``java.io.StreamTokenizer``) undoes, so
+    any password round-trips like the reference's."""
     opts: dict[str, str] = {}
     if sasl_username is not None:
         proto = "SASL_SSL" if tls else "SASL_PLAINTEXT"
@@ -51,7 +58,8 @@ def security_options(
         opts["kafka.sasl.mechanism"] = "PLAIN"
         opts["kafka.sasl.jaas.config"] = (
             "org.apache.kafka.common.security.plain.PlainLoginModule required "
-            f'username="{sasl_username}" password="{sasl_password}";'
+            f"username={_jaas_quote(sasl_username)} "
+            f"password={_jaas_quote(sasl_password or '')};"
         )
     elif tls:
         opts["kafka.security.protocol"] = "SSL"

@@ -148,9 +148,3 @@ def fan_width(
         1,
         min(spark.sparkContext.defaultParallelism, -(-rows // per_task)),
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

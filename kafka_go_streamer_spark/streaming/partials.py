@@ -1,6 +1,21 @@
 """Idempotent partial-store writes for the associative-partial
-monitors (calibration / privacy / shard plan / pii density / language
-budget).
+monitors. Each monitored table has ONE definition, a ``*_partials``
+(one micro-batch) + ``merged_*`` (any number of batches) pair beside
+its registered query, which is itself the merge of a single partial:
+
+* ``quality_calibration_bins`` — ``plans/audit_ops.calibration_partials``
+  / ``merged_calibration``;
+* ``privacy_k_anonymity`` — ``plans/audit_ops.qi_class_partials`` /
+  ``merged_k_anonymity``;
+* ``sample_language_budget`` — ``plans/audit_ops.lang_partials`` /
+  ``merged_language_budget``;
+* ``storage_shard_plan`` — ``plans/pipeline_econ.shard_partials`` /
+  ``merged_shard_plan``;
+* ``pii_density_by_source`` — ``plans/semdedup.pii_partials`` /
+  ``merged_pii_density``.
+
+A monitor's ``foreachBatch`` writes ``X_partials(batch)`` here; its
+published table is ``merged_X(spark.read.parquet(store))``.
 
 The monitors' streamed == batch guarantee needs each micro-batch's
 partial rows to land EXACTLY once in the partial store. foreachBatch

@@ -76,26 +76,25 @@ def start_file_stream_router(
     spliter: Spliter,
     input_dir: str,
     query_name: str = "routed",
-    trigger_once: bool = True,
 ):
     """Kafka-less streaming harness (the driver environment has no
     broker): text-file source -> the same routing core -> in-memory
-    sink, mirroring the reference's compose-test topology
-    (docker-compose-test.yml) without infrastructure."""
+    sink, drained once (``availableNow``), mirroring the reference's
+    compose-test topology (docker-compose-test.yml) without
+    infrastructure."""
     lines = (
         spark.readStream.format("text")
         .load(input_dir)
         .select(F.lit(None).cast("string").alias("key"), F.col("value"))
     )
     routed = route_microbatch(lines, spliter)
-    writer = (
+    return (
         routed.writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_checkpointed_file_router(

@@ -49,10 +49,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from kafka_go_streamer_spark.plans.routing_queries import DOCS_SPLITER
-    from kafka_go_streamer_spark.session import get_spark
+    from kafka_go_streamer_spark.session import cpu_count, get_spark
     from kafka_go_streamer_spark.streaming.router import route_microbatch
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpu_count()
     spark = get_spark("kgs-bench-router", cpus=cpus)
     sf = round(
         float(os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")), 4

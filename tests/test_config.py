@@ -20,6 +20,7 @@ from kafka_go_streamer_spark.config import (
     load_split_conf,
     load_split_conf_b64,
 )
+from kafka_go_streamer_spark.routing import route
 
 FIXTURE_YAML = """
 extractors:
@@ -111,16 +112,44 @@ def test_b64_roundtrip():
     assert len(coll.spliters) == 3
 
 
-def test_bad_regex_fails_at_plan_build():
-    bad = """
-spliters_templates:
-  - input_topic: t
-    actions: {}
-    splits:
-      - extractor: {pattern: '([unclosed', use_regex: true}
-"""
-    with pytest.raises(ConfigError):
-        load_split_conf(bad)
+def _regex_spliter(pattern: str):
+    return load_split_conf(
+        "spliters_templates:\n  - input_topic: t\n"
+        "    actions: {matched: m}\n"
+        f"    splits:\n      - extractor: {{pattern: '{pattern}', use_regex: true}}\n"
+    ).spliters[0]
+
+
+def test_bad_regex_fails_at_plan_build(spark):
+    """Regex splits are judged by java.util.regex, the dialect ``rlike``
+    runs: ``route()`` raises ConfigError naming the spliter and the
+    pattern before it returns a plan, so no job ever runs. ``(?P<n>ab)``
+    is valid for Python ``re`` and Go RE2 but not for Java."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame([("k", "ab")], "key string, value string")
+    sc.setJobGroup("bad-regex-plan-build", "route() on bad regex splits")
+    try:
+        for pattern in ("([unclosed", "(?P<n>ab)"):
+            spliter = _regex_spliter(pattern)  # parsing does not judge
+            with pytest.raises(ConfigError) as err:
+                route(df, spliter)
+            assert "'t'" in str(err.value) and pattern in str(err.value)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("bad-regex-plan-build") == []
+
+
+def test_java_only_regex_syntax_routes(spark):
+    """``\\z`` (end of input) is valid in Java and Go but not in Python
+    ``re``: parsing accepts it and the route honours it."""
+    spliter = _regex_spliter(r"ab\z")
+    df = spark.createDataFrame(
+        [("1", "xab"), ("2", "abx")], "key string, value string"
+    )
+    assert {r.key: r.topic for r in route(df, spliter).collect()} == {
+        "1": "m",
+        "2": None,
+    }
 
 
 def test_group_id_layout_and_validation():

@@ -6,10 +6,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kafka_go_streamer_spark.functions.text import words
 from kafka_go_streamer_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
-    shingles,
+    shingles_of,
     with_minhash,
 )
 
@@ -54,11 +55,11 @@ def test_minhash_finds_near_duplicates(spark):
 
 def test_shingle_construction(spark):
     df = spark.createDataFrame([(1, "a b c d")], "id int, text string")
-    got = df.select(shingles(F.col("text")).alias("sh")).collect()[0]["sh"]
+    got = df.select(shingles_of(words(F.col("text"))).alias("sh")).collect()[0]["sh"]
     assert sorted(got) == ["a b c", "b c d"]
     # short doc -> whole text as single shingle
     df2 = spark.createDataFrame([(1, "a b")], "id int, text string")
-    got2 = df2.select(shingles(F.col("text")).alias("sh")).collect()[0]["sh"]
+    got2 = df2.select(shingles_of(words(F.col("text"))).alias("sh")).collect()[0]["sh"]
     assert got2 == ["a b"]
 
 

@@ -1,22 +1,15 @@
-"""Streaming calibration monitor (streaming/calibration.py): documents
-arrive across micro-batches; per-batch partial bin counters accumulate
-and the merged table must equal the registered batch query
-``quality_calibration_bins`` EXACTLY for any batching (the counters
-are associative sums; the scoring stage is shared code). Pinned for
-1-batch and 2-batch arrivals."""
+"""Streaming calibration monitor: documents arrive across 1 or 2 micro-
+batches; per-batch partials written through ``write_epoch_partials``
+merge to a table that must equal the registered query
+``quality_calibration_bins`` (itself the merge of a single partial)
+AND its DuckDB oracle, the independent reference
+(tests/monitor_harness.py)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from kafka_go_streamer_spark.plans import QUERIES
-from kafka_go_streamer_spark.sources.tables import load_table
-from kafka_go_streamer_spark.streaming.calibration import (
-    calibration_partials,
-    merged_calibration,
-)
-from kafka_go_streamer_spark.streaming.partials import write_epoch_partials
+from tests.monitor_harness import run_monitor
 
 pytestmark = pytest.mark.slow
 
@@ -24,58 +17,8 @@ pytestmark = pytest.mark.slow
 @pytest.mark.timeout(300)
 @pytest.mark.parametrize("n_batches", [1, 2])
 def test_streaming_calibration_matches_batch(
-    spark, sf_dir, tmp_path, n_batches
+    spark, sf_dir, oracle_df, tmp_path, n_batches
 ):
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    median = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
-
-    src = tmp_path / "doc_stream"
-    src.mkdir()
-    partials_dir = str(tmp_path / "partials")
-    if n_batches == 1:
-        docs.coalesce(1).write.parquet(str(src / "b1"))
-    else:
-        docs.filter(F.col("doc_id") <= median).coalesce(1).write.parquet(
-            str(src / "b1")
-        )
-        docs.filter(F.col("doc_id") > median).coalesce(1).write.parquet(
-            str(src / "b2")
-        )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
+    run_monitor(
+        spark, sf_dir, oracle_df, tmp_path, "quality_calibration_bins", n_batches
     )
-
-    def monitor(bdf, epoch_id):
-        # idempotent epoch-partition overwrite: a replayed epoch
-        # rewrites its own rows instead of double-counting them
-        write_epoch_partials(calibration_partials(bdf), epoch_id, partials_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(240), "stream did not terminate within 240s"
-
-    partials = spark.read.parquet(partials_dir)
-    # each batch contributes at most one partial row per bin
-    n_epochs = partials.select("epoch").distinct().count()
-    assert n_epochs == n_batches
-
-    streamed = {
-        r["bin"]: (r["n_docs"], r["mean_score"], r["pos_rate"], r["gap"])
-        for r in merged_calibration(partials).collect()
-    }
-    batch = {
-        r["bin"]: (r["n_docs"], r["mean_score"], r["pos_rate"], r["gap"])
-        for r in QUERIES["quality_calibration_bins"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert streamed == batch
-    # the monitor provably observes a non-degenerate table
-    assert len(batch) >= 2

@@ -1,93 +1,24 @@
-"""Streaming language-budget monitor (streaming/langbudget.py):
-documents arrive across micro-batches; per-language token counters
-accumulate and the merged allocation worksheet must equal the
-registered batch query ``sample_language_budget`` EXACTLY for any
-batching (integer token sums, associative; shared closed-form
-allocation stage). Pinned for 1-batch and 2-batch arrivals with
-idempotent epoch-partition writes."""
+"""Streaming language-budget monitor: documents arrive across 1 or 2
+micro-batches; per-batch partials written through
+``write_epoch_partials`` merge to a table that must equal the
+registered query ``sample_language_budget`` (itself the merge of a
+single partial) AND its DuckDB oracle, the independent reference
+(tests/monitor_harness.py)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from kafka_go_streamer_spark.plans import QUERIES
-from kafka_go_streamer_spark.sources.tables import load_table
-from kafka_go_streamer_spark.streaming.langbudget import (
-    lang_partials,
-    merged_language_budget,
-)
-from kafka_go_streamer_spark.streaming.partials import write_epoch_partials
+from tests.monitor_harness import run_monitor
 
 pytestmark = pytest.mark.slow
-
-
-def _rows(df):
-    return {
-        r["lang"]: (
-            r["avail_tokens"],
-            r["target_tokens"],
-            r["alloc_tokens"],
-            r["fill_share"],
-        )
-        for r in df.collect()
-    }
 
 
 @pytest.mark.timeout(300)
 @pytest.mark.parametrize("n_batches", [1, 2])
 def test_streaming_langbudget_matches_batch(
-    spark, sf_dir, tmp_path, n_batches
+    spark, sf_dir, oracle_df, tmp_path, n_batches
 ):
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
+    run_monitor(
+        spark, sf_dir, oracle_df, tmp_path, "sample_language_budget", n_batches
     )
-    median = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
-
-    src = tmp_path / "doc_stream"
-    src.mkdir()
-    partials_dir = str(tmp_path / "partials")
-    if n_batches == 1:
-        docs.coalesce(1).write.parquet(str(src / "b1"))
-    else:
-        docs.filter(F.col("doc_id") <= median).coalesce(1).write.parquet(
-            str(src / "b1")
-        )
-        docs.filter(F.col("doc_id") > median).coalesce(1).write.parquet(
-            str(src / "b2")
-        )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-
-    def monitor(bdf, epoch_id):
-        # idempotent epoch-partition overwrite (replay-safe)
-        write_epoch_partials(lang_partials(bdf), epoch_id, partials_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(240), "stream did not terminate within 240s"
-
-    partials = spark.read.parquet(partials_dir)
-    assert partials.select("epoch").distinct().count() == n_batches
-
-    streamed = _rows(merged_language_budget(partials))
-    batch = _rows(QUERIES["sample_language_budget"](spark, sf_dir))
-    assert streamed == batch
-    # multilingual and non-degenerate: the allocation spends the full
-    # budget and the dominant language has the smallest fill share
-    assert len(batch) >= 2
-    total_avail = sum(v[0] for v in batch.values())
-    total_alloc = sum(v[2] for v in batch.values())
-    assert total_alloc == pytest.approx(0.5 * total_avail, rel=1e-6)
-    shares = {k: v[3] for k, v in batch.items()}
-    biggest = max(batch, key=lambda k: batch[k][0])
-    assert shares[biggest] == min(shares.values())
-    assert max(shares.values()) > min(shares.values())

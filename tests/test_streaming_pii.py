@@ -1,84 +1,24 @@
-"""Streaming PII-density monitor (streaming/pii.py): documents arrive
-across micro-batches; per-source PII counters accumulate and the
-merged table must equal the registered batch query
-``pii_density_by_source`` EXACTLY for any batching (integer counters,
-associative sums, shared per-document projection). Pinned for 1-batch
-and 2-batch arrivals with idempotent epoch-partition writes."""
+"""Streaming PII-density monitor: documents arrive across 1 or 2 micro-
+batches; per-batch partials written through ``write_epoch_partials``
+merge to a table that must equal the registered query
+``pii_density_by_source`` (itself the merge of a single partial) AND
+its DuckDB oracle, the independent reference
+(tests/monitor_harness.py)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from kafka_go_streamer_spark.plans import QUERIES
-from kafka_go_streamer_spark.sources.tables import load_table
-from kafka_go_streamer_spark.streaming.partials import write_epoch_partials
-from kafka_go_streamer_spark.streaming.pii import (
-    merged_pii_density,
-    pii_partials,
-)
+from tests.monitor_harness import run_monitor
 
 pytestmark = pytest.mark.slow
 
 
-def _rows(df):
-    return {
-        r["source"]: (
-            r["n_docs"],
-            r["docs_with_pii"],
-            r["n_emails"],
-            r["n_phones"],
-            r["pii_per_10kchars"],
-        )
-        for r in df.collect()
-    }
-
-
 @pytest.mark.timeout(300)
 @pytest.mark.parametrize("n_batches", [1, 2])
-def test_streaming_pii_matches_batch(spark, sf_dir, tmp_path, n_batches):
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
+def test_streaming_pii_matches_batch(
+    spark, sf_dir, oracle_df, tmp_path, n_batches
+):
+    run_monitor(
+        spark, sf_dir, oracle_df, tmp_path, "pii_density_by_source", n_batches
     )
-    median = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
-
-    src = tmp_path / "doc_stream"
-    src.mkdir()
-    partials_dir = str(tmp_path / "partials")
-    if n_batches == 1:
-        docs.coalesce(1).write.parquet(str(src / "b1"))
-    else:
-        docs.filter(F.col("doc_id") <= median).coalesce(1).write.parquet(
-            str(src / "b1")
-        )
-        docs.filter(F.col("doc_id") > median).coalesce(1).write.parquet(
-            str(src / "b2")
-        )
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-
-    def monitor(bdf, epoch_id):
-        # idempotent epoch-partition overwrite (replay-safe)
-        write_epoch_partials(pii_partials(bdf), epoch_id, partials_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(240), "stream did not terminate within 240s"
-
-    partials = spark.read.parquet(partials_dir)
-    assert partials.select("epoch").distinct().count() == n_batches
-
-    streamed = _rows(merged_pii_density(partials))
-    batch = _rows(QUERIES["pii_density_by_source"](spark, sf_dir))
-    assert streamed == batch
-    # the seeded corpus provably carries PII in several sources
-    assert sum(v[1] for v in batch.values()) > 0
-    assert len(batch) >= 2
